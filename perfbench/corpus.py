@@ -28,11 +28,6 @@ class Prepared:
     seeds: list                 # [(board, index.html url)] in crawl order
 
 
-def site_config(site: dict, seed: int):
-    from pttcrawler_spark.synth.site import SiteConfig
-    return SiteConfig(seed=seed, **site)
-
-
 def seed_urls(cfg) -> list[tuple[str, str]]:
     return [(cfg.board_name(b),
              f"{cfg.base_url(cfg.board_name(b))}/bbs/{cfg.board_name(b)}/index.html")
@@ -100,8 +95,8 @@ def prepare(work: Path, workload: str, site: dict, seed: int) -> Prepared:
     """Generate (or reuse) the corpus and the oracle for one seed. A cache
     entry is keyed by workload, seed and the exact site shape, and only
     trusted once its oracle file (written last) exists."""
-    from pttcrawler_spark.synth.site import generate_site_pandas
-    cfg = site_config(site, seed)
+    from pttcrawler_spark.synth.site import SiteConfig, generate_site_pandas
+    cfg = SiteConfig(seed=seed, **site)
     key = json.dumps({"site": site, "format": CACHE_FORMAT}, sort_keys=True)
     shape = hashlib.sha256(key.encode()).hexdigest()[:12]
     d = work / "cache" / f"{workload}-{seed}-{shape}"

@@ -298,8 +298,8 @@ def run(workload: str, seed: int, seconds: float, trace: bool, work: Path,
                                             tracer, runs_dir)
             else:
                 lm, checks = _step_layer_metrics(
-                    spark, ops, ops_impl, runtime, spark_work, tracer, work,
-                    runs_dir, seed)
+                    spark, wl, ops, ops_impl, runtime, spark_work, tracer,
+                    work, runs_dir, seed)
             for errs in checks:
                 attempted += 1
                 failed += bool(errs)
@@ -437,14 +437,13 @@ def _span_s(tracer: Tracer, name: str) -> float:
     return sum(s["end"] - s["start"] for s in tracer.by_name(name))
 
 
-def _step_layer_metrics(spark, ops, ops_impl, runtime, spark_work, tracer,
+def _step_layer_metrics(spark, wl, ops, ops_impl, runtime, spark_work, tracer,
                         work, runs_dir, seed):
     """Per-layer metrics of a traced step run. Admission, URL-seen, commit
     and Spark runtime come from the timed steps and their inputs; the
     crawl-loop layers (batches, parse, verify, state, report path) come
     from the workload's small layer crawl, run here after the steps."""
     from pttcrawler_spark.engine import crawl as C
-    wl = next(w for w in WORKLOADS.values() if w.kind == "step")
     st = ops_impl.stepper
     n_urls = sum(op["urls"] for op in ops)
     m = runtime.metrics(spark_work, len(ops), n_urls)
