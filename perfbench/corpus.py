@@ -4,8 +4,8 @@ The corpus is the synthetic site the engine "fetches" from (one parquet
 dataset partitioned by kind/page_index, like bench.prepare_corpus); the
 oracle is the reference-faithful single-threaded simulator's view of the
 same site, reduced to what the correctness gate compares: per-host fetch
-order, the URL-seen set, and the relational tables' row counts plus the
-TW-IP report tallies.
+order (with each fetched page's kind), the URL-seen set, and the
+relational tables' row counts plus the TW-IP report tallies.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ from dataclasses import dataclass
 from pathlib import Path
 
 
-CACHE_FORMAT = 1   # bump when oracle_summary's fields change
+CACHE_FORMAT = 2   # bump when oracle_summary's fields change
 
 
 @dataclass
@@ -68,11 +68,14 @@ def oracle_summary(corpus_pdf, cfg) -> dict:
     from pttcrawler_spark.oracle.simulator import run_oracle
     sim = run_oracle(corpus_pdf, cfg)
     order: dict[str, list[str]] = {}
+    kinds: dict[str, list[str]] = {}
     for ev in sim.fetch_events:
         order.setdefault(ev["host"], []).append(ev["url"])
+        kinds.setdefault(ev["host"], []).append(ev["kind"])
     t = sim.tables()
     return {
         "fetch_order": order,
+        "fetch_kinds": kinds,
         "url_seen": sorted(sim.url_seen),
         "n_articles": len(t["article"]),
         "article_ids": sorted(t["article"]["web_id"]),

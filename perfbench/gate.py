@@ -6,7 +6,10 @@ are pure functions of that data and the oracle summary, so the self-test
 can corrupt a copy of the outputs and watch the gate trip.
 
 Each check function returns a list of failure messages; an operation fails
-when its list is non-empty.
+when its list is non-empty. A crawl may stop before it is complete, so the
+crawl check compares the store with the part of the oracle's crawl that the
+batches run so far must have done (``expected_fetches``, ``discovered``;
+frontier.py derives the step workload's inputs from the same model).
 """
 
 from __future__ import annotations
@@ -47,25 +50,78 @@ def n_fetched(out: dict) -> int:
     return sum(len(v) for v in out["fetch_order"].values())
 
 
-def check_crawl(out: dict, oracle: dict) -> list[str]:
-    """Per-host fetch order and the URL-seen set must be the oracle's, the
-    frontier must hold nothing but fetched rows, every article that parses
-    in the oracle must be parsed, and every payload must pass verify."""
+def expected_fetches(kinds: list[str], batches: int, budget: int) -> int:
+    """How many of one host's URLs, in the oracle's fetch order, the engine
+    fetches in ``batches`` micro-batches: each batch admits up to ``budget``
+    URLs (the token bucket refilled to its burst) and stops after the first
+    index or bootstrap page (the discovery barrier), whose links are only
+    known once it is fetched."""
+    pos = 0
+    for _ in range(batches):
+        for _ in range(budget):
+            if pos == len(kinds):
+                return pos
+            pos += 1
+            if kinds[pos - 1] != "article":
+                break
+    return pos
+
+
+def discovered(urls: list[str], kinds: list[str], n: int) -> set[str]:
+    """URLs known after fetching the first ``n`` of one host's oracle order:
+    the bootstrap page lists every index page, an index page the articles
+    that follow it."""
+    seen = set(urls[:n])
+    for i in range(n):
+        if i == 0:
+            seen.update(u for u, k in zip(urls, kinds) if k != "article")
+        elif kinds[i] != "article":
+            j = i + 1
+            while j < len(urls) and kinds[j] == "article":
+                seen.add(urls[j])
+                j += 1
+    return seen
+
+
+def web_id(url: str) -> str:
+    return url.rsplit("/", 1)[-1].replace(".html", "")
+
+
+def check_crawl(out: dict, oracle: dict, batches: int, budget: int) -> list[str]:
+    """The store after ``batches`` committed batches against the oracle:
+    each host's fetch order is the oracle's, cut where the politeness
+    budget and the discovery barrier cut it; the URL-seen set is what those
+    fetches discovered, fetched or pending; every fetched article that
+    parses in the oracle is parsed; every payload passes verify."""
     errs = []
-    want, got = oracle["fetch_order"], out["fetch_order"]
-    if set(got) != set(want):
-        errs.append(f"hosts differ: {sorted(set(got) ^ set(want))[:3]}")
-    for host in sorted(set(got) & set(want)):
-        if got[host] != want[host]:
-            errs.append(f"fetch order differs on {host}")
-    if out["frontier_urls"] != oracle["url_seen"]:
+    want_order: dict[str, list[str]] = {}
+    want_seen: set[str] = set()
+    for host, urls in oracle["fetch_order"].items():
+        kinds = oracle["fetch_kinds"][host]
+        n = expected_fetches(kinds, batches, budget)
+        want_order[host] = urls[:n]
+        want_seen |= discovered(urls, kinds, n)
+    got = out["fetch_order"]
+    if set(got) != set(want_order):
+        errs.append(f"hosts differ: {sorted(set(got) ^ set(want_order))[:3]}")
+    for host in sorted(set(got) & set(want_order)):
+        if got[host] != want_order[host]:
+            errs.append(f"fetch order differs on {host} ({len(got[host])} vs "
+                        f"{len(want_order[host])} URLs)")
+    if out["frontier_urls"] != sorted(want_seen):
         errs.append(f"URL-seen set differs ({len(out['frontier_urls'])} vs "
-                    f"{len(oracle['url_seen'])} URLs)")
-    if set(out["statuses"]) != {"fetched"}:
-        errs.append(f"frontier statuses {out['statuses']}")
-    if out["parsed_ids"] != oracle["article_ids"]:
+                    f"{len(want_seen)} URLs)")
+    n_fetched = sum(len(v) for v in want_order.values())
+    want_status = {"fetched": n_fetched}
+    if len(want_seen) > n_fetched:
+        want_status["pending"] = len(want_seen) - n_fetched
+    if out["statuses"] != want_status:
+        errs.append(f"frontier statuses {out['statuses']} != {want_status}")
+    fetched_ids = {web_id(u) for urls in want_order.values() for u in urls}
+    want_ids = sorted(fetched_ids & set(oracle["article_ids"]))
+    if out["parsed_ids"] != want_ids:
         errs.append(f"parsed articles {len(out['parsed_ids'])} != "
-                    f"{len(oracle['article_ids'])}")
+                    f"{len(want_ids)}")
     if len(out["verify"]) != out["n_images"] or not out["verify"]:
         errs.append(f"payload_verify has {len(out['verify'])} rows for "
                     f"{out['n_images']} images")

@@ -1,22 +1,29 @@
-"""One benchmark run: set up, crawl in a closed loop, gate, report metrics.
+"""One benchmark run: set up, run operations in a closed loop, gate, report.
 
 Timeline of a run (one process, one JVM on local[nproc]):
 
 1. setup (``setup_s``): the SparkSession starts while a helper thread
-   generates the seed's corpus and computes its oracle (or loads both from
-   the cache); setup ends when both are ready.
-2. timed loop: one client, closed loop. Each operation is one full crawl of
-   the workload's site into a fresh store; the next starts only after the
-   previous ``crawl()`` returned (its last commit and its payload verify
-   landed). Operations start until ``seconds`` have passed.
+   generates the seed's site and computes its oracle (or loads both from
+   the cache). A crawl workload then starts its first crawl, whose first
+   batch is the warm-up (in a fresh JVM it costs about three warm batches:
+   cold planning, code generation, Python workers); setup ends when that
+   batch's ``commit_batch`` returns. A step workload derives its frontier,
+   loads it into Spark and runs one warm-up step.
+2. timed loop: one client, closed loop; each operation starts after the
+   previous one has committed, until ``seconds`` have passed. A crawl
+   workload's operation is one crawl of the site from scratch with
+   ``engine.crawl.crawl()``, timed from its warm-up batch's commit to the
+   return of ``crawl()`` (the last commit and payload verify landed). A
+   step workload's operation is one committed scheduling step.
 3. gate (untimed): every operation's outputs against the oracle.
 4. traced run only: per-layer metrics from the first operation (spans,
    Spark REST, ``CrawlResult.batch_stats``), the post-crawl report path on
-   its store, and the isolated layer probes.
+   a complete store and the isolated layer probes.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import shutil
 import statistics
@@ -171,60 +178,87 @@ def _p50(values) -> float:
     return statistics.median(values) if values else 0.0
 
 
-class CrawlOps:
-    """Operation = one full crawl of the workload's site into a fresh store."""
+WARM_BATCHES = 1
 
-    def __init__(self, spark, prepared, crawl_cfg):
+
+class CrawlOps:
+    """Operation = one crawl of the site from scratch; its first
+    ``WARM_BATCHES`` batches are the warm-up and are not timed."""
+
+    def __init__(self, spark, prepared, crawl_cfg: dict, batches: int):
         from pttcrawler_spark.engine import crawl as C
-        self.crawl, self.spark, self.p, self.cfg = C.crawl, spark, prepared, crawl_cfg
+        self.crawl, self.spark, self.p = C.crawl, spark, prepared
+        self.cfg = C.CrawlConfig(**crawl_cfg, max_batches=batches)
+        self.budget = math.floor(self.cfg.burst)
         self.corpus = spark.read.parquet(prepared.corpus_dir)
 
-    def run(self, runs_dir: Path, i: int):
-        out_dir = str(runs_dir / f"op{i}")
+    def run(self, out_dir: str):
         shutil.rmtree(out_dir, ignore_errors=True)
-        return self.crawl(self.spark, self.corpus, self.p.seeds, out_dir, self.cfg)
+        return self.crawl(self.spark, self.corpus, self.p.seeds, out_dir,
+                          self.cfg)
 
-    def gate(self, runs_dir: Path, i: int, res) -> tuple[dict, list[str], int]:
+    def timed(self, call, runs_dir: Path, i: int, clock) -> dict:
+        n_before = len(clock.returns)
+        res = call(self.run, str(runs_dir / f"op{i}"))
+        t_end = time.perf_counter()
+        rets = clock.returns[n_before + WARM_BATCHES - 1:]
+        return {"res": res, "t_start": rets[0], "wall": t_end - rets[0],
+                "urls": sum(b["fetched"] for b in res.batch_stats[WARM_BATCHES:]),
+                "gaps": [b - a for a, b in zip(rets, rets[1:])]}
+
+    def gate(self, runs_dir: Path, i: int, op: dict) -> tuple[dict, list[str]]:
+        res = op["res"]
         out = G.crawl_outputs(res)
-        return out, G.check_crawl(out, self.p.oracle), G.n_fetched(out)
+        return out, G.check_crawl(out, self.p.oracle, res.final_batch + 1,
+                                  self.budget)
 
 
 class StepOps:
-    """Operation = one committed scheduling step over the polite backlog."""
+    """Operation = one committed scheduling step over the frontier a polite
+    crawl of the site holds after ``cut`` batches."""
 
-    def __init__(self, spark, backlog, shape):
-        self.stepper = FR.Stepper(spark, backlog, shape)
-        self.oracle = backlog.oracle
+    def __init__(self, spark, prepared, crawl_cfg: dict, cut: int,
+                 runs_dir: Path):
+        from pttcrawler_spark.engine import crawl as C
+        cfg = C.CrawlConfig(**crawl_cfg)
+        self.backlog = FR.derive(prepared, math.floor(cfg.burst), cut)
+        self.stepper = FR.Stepper(spark, self.backlog, cfg)
+        self.urls = len(self.backlog.pending) + len(self.backlog.candidates)
+        # the warm-up: the first step in a fresh JVM costs about two warm ones
+        self.stepper.step(str(runs_dir / "warmup"), 0)
 
-    def run(self, runs_dir: Path, i: int):
-        self.stepper.step(str(runs_dir / "steps"), i)
+    def timed(self, call, runs_dir: Path, i: int, clock) -> dict:
+        prev = clock.returns[-1:]       # cadence across steps
+        n_before = len(clock.returns)
+        t_start = time.perf_counter()
+        call(self.stepper.step, str(runs_dir / "steps"), i)
+        rets = prev + clock.returns[n_before:]
+        return {"res": None, "t_start": t_start,
+                "wall": time.perf_counter() - t_start, "urls": self.urls,
+                "gaps": [b - a for a, b in zip(rets, rets[1:])]}
 
-    def gate(self, runs_dir: Path, i: int, _res) -> tuple[dict, list[str], int]:
+    def gate(self, runs_dir: Path, i: int, op: dict) -> tuple[dict, list[str]]:
         out = FR.step_outputs(str(runs_dir / "steps"), i)
-        return (out, FR.check_step(out, self.oracle),
-                self.oracle["n_pending"] + self.oracle["n_candidates"])
+        return out, FR.check_step(out, self.backlog)
 
 
 def run(workload: str, seed: int, seconds: float, trace: bool, work: Path,
-        shape: dict | None = None, spark=None) -> dict:
+        site: dict | None = None, spark=None) -> dict:
     """One run; returns {correct, attempted, failed, metrics, detail}.
-    ``shape`` overrides the workload's input size (self-test); ``spark``
+    ``site`` overrides the workload's site shape (self-test); ``spark``
     reuses a running session instead of starting and stopping one."""
-    from pttcrawler_spark.engine import crawl as C
     wl = WORKLOADS[workload]
-    shape = shape or wl.shape
+    site = site or wl.site
     host0 = host_sample()
     runs_dir = work / "runs" / str(os.getpid())
     shutil.rmtree(runs_dir, ignore_errors=True)
 
-    # 1. setup: session start overlapped with input + oracle preparation,
-    # then (step workloads) loading and caching the inputs
+    # 1. setup: session start overlapped with input + oracle preparation;
+    # then the step inputs are loaded, or the first crawl's warm-up batch
+    # runs (setup ends where the first operation's timed part starts)
     t0 = time.perf_counter()
     pool = ThreadPoolExecutor(max_workers=1)
-    if wl.kind == "crawl":
-        prepared = pool.submit(CP.prepare, work, workload, shape, seed)
-    else:
-        prepared = pool.submit(FR.prepare, work, shape, seed)
+    prepared = pool.submit(CP.prepare, work, workload, site, seed)
     pool.shutdown(wait=False)
     own_session = spark is None
     if own_session:
@@ -237,47 +271,49 @@ def run(workload: str, seed: int, seconds: float, trace: bool, work: Path,
         inputs = prepared.result()
         setup_parts["inputs"] = time.perf_counter() - t0
         if wl.kind == "crawl":
-            ops_impl = CrawlOps(spark, inputs, C.CrawlConfig(**wl.crawl))
+            ops_impl = CrawlOps(spark, inputs, wl.crawl, wl.batches)
         else:
-            ops_impl = StepOps(spark, inputs, shape)
-        setup_s = time.perf_counter() - t0
+            ops_impl = StepOps(spark, inputs, wl.crawl, wl.cut, runs_dir)
+
+        def call(fn, *args):    # one operation, a root span when traced
+            return tracer.operation(wl.kind, fn, *args) if tracer else fn(*args)
 
         if trace:
             runtime = L.SparkRuntime(spark)
-            clock.on_return = runtime.sample_storage
             tracer = Tracer(f"{workload}-{seed}-{os.getpid()}")
             install_spans(tracer)
+            rest = {}
+            if wl.kind == "step":
+                rest["before"] = runtime.snapshot()
+
+            def on_commit():    # a crawl's Spark work counts from its warm-up's commit
+                if len(clock.returns) == WARM_BATCHES and "before" not in rest:
+                    rest["before"] = runtime.snapshot()
+                runtime.sample_storage()
+
+            clock.on_return = on_commit
 
         # 2. timed closed loop
         ops = []
-        last_commit = clock.returns[-1] if clock.returns else None
-        before = runtime.snapshot() if runtime else None
         t_loop = time.perf_counter()
         while True:
-            i = len(ops)
-            n_before = len(clock.returns)
-            t_op = time.perf_counter()
-            if tracer:
-                res = tracer.operation(wl.kind, ops_impl.run, runs_dir, i)
-            else:
-                res = ops_impl.run(runs_dir, i)
-            wall = time.perf_counter() - t_op
-            rets = clock.returns[n_before:]
-            if wl.kind == "step" and last_commit is not None:
-                rets = [last_commit] + rets       # cadence across steps
-            last_commit = clock.returns[-1] if clock.returns else None
-            ops.append({"res": res, "wall": wall,
-                        "gaps": [b - a for a, b in zip(rets, rets[1:])]})
+            ops.append(ops_impl.timed(call, runs_dir, len(ops), clock))
+            if wl.kind == "crawl" and runtime and len(ops) == 1:
+                spark_work = runtime.since(rest["before"])
+                clock.on_return = None
             if time.perf_counter() - t_loop >= seconds:
                 break
         t_gate = time.perf_counter()
-        spark_work = runtime.since(before) if runtime else None
+        if wl.kind == "step" and runtime:
+            spark_work = runtime.since(rest["before"])
+            clock.on_return = None
+        setup_s = ops[0]["t_start"] - t0
 
         # 3. gate, outside the timed region
         attempted = failed = 0
         errors: list[str] = []
         for i, op in enumerate(ops):
-            op["out"], errs, op["urls"] = ops_impl.gate(runs_dir, i, op["res"])
+            op["out"], errs = ops_impl.gate(runs_dir, i, op)
             attempted += 1
             failed += bool(errs)
             errors += errs
@@ -293,13 +329,12 @@ def run(workload: str, seed: int, seconds: float, trace: bool, work: Path,
         # 4. traced run: per-layer metrics
         if trace:
             if wl.kind == "crawl":
-                lm, checks = _layer_metrics(spark, ops, ops_impl.p,
-                                            ops_impl.cfg, runtime, spark_work,
-                                            tracer, runs_dir)
+                lm, checks = _layer_metrics(spark, ops, ops_impl, runtime,
+                                            spark_work, tracer, runs_dir)
             else:
-                lm, checks = _step_layer_metrics(
-                    spark, wl, ops, ops_impl, runtime, spark_work, tracer,
-                    work, runs_dir, seed)
+                lm, checks = _step_layer_metrics(spark, wl, ops, ops_impl,
+                                                 runtime, spark_work, tracer,
+                                                 clock, work, runs_dir, seed)
             for errs in checks:
                 attempted += 1
                 failed += bool(errs)
@@ -319,77 +354,89 @@ def run(workload: str, seed: int, seconds: float, trace: bool, work: Path,
             stop_session(spark)
         shutil.rmtree(runs_dir, ignore_errors=True)
 
-    first = ops[0]["res"]
+    detail = {"workload": workload, "seed": seed, "ops": len(ops),
+              "phase_s": phase_s,
+              "op_wall_s": [op["wall"] for op in ops],
+              "commit_gaps_s": gaps,
+              "ops_failed_ratio": failed / attempted,
+              "errors": errors[:20],
+              "host": host_context(host0, host_sample())}
+    if wl.kind == "crawl":
+        stats = ops[0]["res"].batch_stats
+        detail["batches"] = [{k: b[k] for k in ("fetched", "wall_s", "phase_s")}
+                             for b in stats]
+        detail["byte_path_share"] = byte_path_share(stats[WARM_BATCHES:],
+                                                    ops[0]["wall"])
     return {
         "correct": failed == 0,
         "attempted": attempted,
         "failed": failed,
         "metrics": {k: {"value": float(v), "unit": units[k]}
                     for k, v in metrics.items()},
-        "detail": {"workload": workload, "seed": seed, "ops": len(ops),
-                   "phase_s": phase_s,
-                   "op_wall_s": [op["wall"] for op in ops],
-                   "commit_gaps_s": gaps,
-                   "batches": [] if first is None else
-                   [{k: b[k] for k in ("fetched", "wall_s", "phase_s")}
-                    for b in first.batch_stats],
-                   "ops_failed_ratio": failed / attempted,
-                   "errors": errors[:20],
-                   "host": host_context(host0, host_sample())},
+        "detail": detail,
     }
 
 
-def _layer_metrics(spark, ops, p, crawl_cfg, runtime, spark_work, tracer,
+def byte_path_share(stats: list[dict], wall: float) -> float:
+    """Share of a crawl's timed wall time spent in the phases that scale
+    with page bytes: the fetch (corpus scan and join) and the single-pass
+    parse, both materialized once per batch. The table writes and the
+    payload verify overlap other work and are not counted."""
+    return sum(b["phase_s"].get(k, 0.0) for b in stats
+               for k in ("materialize fetched (kind counts)",
+                         "materialize parsed (single-pass)")) / wall
+
+
+def _layer_metrics(spark, ops, ops_impl, runtime, spark_work, tracer,
                    runs_dir, frontier_probes: bool = True):
-    """Per-layer metrics of a traced crawl run (the first crawl's batches,
-    spans and store; Spark runtime over all timed crawls) → (metrics, the
-    failure lists of the two extra gated operations: the report path and
-    the bloom probe)."""
+    """Per-layer metrics of a traced crawl run → (metrics, the failure
+    lists of the extra gated operations). Batches, spans and the Spark
+    runtime come from the first crawl's timed batches; the report path and
+    the probes run on its complete store."""
     from pttcrawler_spark.engine import export as E
     from pttcrawler_spark.engine import query as Q
     from pttcrawler_spark.engine import store as S
+    p = ops_impl.p
     op = ops[0]
-    res, out = op["res"], op["out"]
-    stats = res.batch_stats
-    n_batches = len(stats)
-    n_urls = G.n_fetched(out)
+    stats = op["res"].batch_stats[WARM_BATCHES:]
     m: dict[str, float] = {}
 
     # engine/crawl
-    m["crawl.batches"] = n_batches
+    m["crawl.batches"] = len(stats)
     m["crawl.urls_per_batch_p50"] = _p50([b["fetched"] for b in stats])
     for key, name in PHASES.items():
         m[f"crawl.phase.{name}_p50_s"] = _p50(
             [b["phase_s"].get(key, 0.0) for b in stats])
 
-    # Spark runtime over the timed crawls
-    m.update(runtime.metrics(
-        spark_work, sum(len(o["res"].batch_stats) for o in ops),
-        sum(o["urls"] for o in ops)))
+    # Spark runtime over the first crawl's timed batches
+    m.update(runtime.metrics(spark_work, len(stats), op["urls"]))
 
-    # engine/state and engine/verify, from the first crawl's spans/outputs
+    # engine/state and engine/verify, from the first crawl's spans
     crawl_span = tracer.by_name("crawl")[0]
 
     def crawl_spans(name):      # worker-thread spans are parented to the crawl
         return sorted((s for s in tracer.by_name(name)
                        if s["parent"] == crawl_span["id"]),
-                      key=lambda s: s["start"])
+                      key=lambda s: s["start"])[WARM_BATCHES:]
 
     m["state.commit_p50_s"] = _p50(
         [s["end"] - s["start"] for s in crawl_spans("state.commit_batch")])
-    n_bytes, n_files = G.dir_bytes_and_files(res.out_dir)
-    m["state.bytes_per_url"] = n_bytes / n_urls
-    m["state.files_per_batch"] = n_files / n_batches
     # one verify call per committed batch, in batch order; batches without
     # articles return at once and are left out
     m["verify.batch_p50_s"] = _p50(
         [s["end"] - s["start"] for s, b in
          zip(crawl_spans("verify.verify_committed_batch"), stats)
          if b["article"] > 0])
-    m["verify.rows"] = len(out["verify"])
-    m["verify.failed_rows"] = G.verify_failed_rows(out)
     m["trace.crawl_s"] = crawl_span["end"] - crawl_span["start"]
     m["trace.crawl_self_s"] = tracer.self_time(crawl_span)
+
+    # the crawl's store (the crawl is complete)
+    res, out, checks = op["res"], op["out"], []
+    n_bytes, n_files = G.dir_bytes_and_files(res.out_dir)
+    m["state.bytes_per_url"] = n_bytes / G.n_fetched(out)
+    m["state.files_per_batch"] = n_files / (res.final_batch + 1)
+    m["verify.rows"] = len(out["verify"])
+    m["verify.failed_rows"] = G.verify_failed_rows(out)
 
     # the post-crawl report path over the committed store
     exp_dir, q_dir = str(runs_dir / "export"), str(runs_dir / "query")
@@ -413,24 +460,25 @@ def _layer_metrics(spark, ops, p, crawl_cfg, runtime, spark_work, tracer,
     m["export.bytes"] = sum(G.dir_bytes_and_files(q)[0] for q in paths.values())
     m["query.tw_ip_report_s"] = (_span_s(tracer, "query.tw_ip_report")
                                  + _span_s(tracer, "query.write_report_csv"))
-    report_errs = G.check_report(G.report_outputs(spark, paths, report_path),
-                                 p.oracle)
+    checks.append(G.check_report(G.report_outputs(spark, paths, report_path),
+                                 p.oracle))
 
-    # isolated probes: execution time of the lazy layers
+    # isolated probes: execution time of the lazy layers, on the
+    # workload's own frontier, pages and images
     m.update(L.probe_store(res))
     m.update(L.probe_state(spark, res))
-    bloom_errs: list[str] = []
     if frontier_probes:     # a step workload measures these on its steps
-        m.update(L.probe_politeness(spark, res.out_dir, stats, crawl_cfg))
+        m.update(L.probe_politeness(spark, res.out_dir, stats, ops_impl.cfg))
         bloom_m, bloom_errs = L.probe_bloom(spark, res.out_dir, stats,
-                                            crawl_cfg, runs_dir / "bloom_probe")
+                                            ops_impl.cfg, runs_dir / "bloom_probe")
         m.update(bloom_m)
+        checks.append(bloom_errs)
     m.update(L.probe_parse(spark, p.corpus_dir))
     m.update(L.probe_verify(spark, res))
 
     m["trace.spans"] = len(tracer.spans)
     m["trace.overhead_s"] = tracer.bookkeeping_s + runtime.poll_s
-    return m, [report_errs] + ([bloom_errs] if frontier_probes else [])
+    return m, checks
 
 
 def _span_s(tracer: Tracer, name: str) -> float:
@@ -438,15 +486,16 @@ def _span_s(tracer: Tracer, name: str) -> float:
 
 
 def _step_layer_metrics(spark, wl, ops, ops_impl, runtime, spark_work, tracer,
-                        work, runs_dir, seed):
+                        clock, work, runs_dir, seed):
     """Per-layer metrics of a traced step run. Admission, URL-seen, commit
     and Spark runtime come from the timed steps and their inputs; the
     crawl-loop layers (batches, parse, verify, state, report path) come
-    from the workload's small layer crawl, run here after the steps."""
-    from pttcrawler_spark.engine import crawl as C
+    from a complete polite crawl of the workload's layer site, run here
+    after the steps. That crawl also checks the step inputs' derivation:
+    the frontier derived for it after 2 batches must be the one the engine
+    committed at batch 1."""
     st = ops_impl.stepper
-    n_urls = sum(op["urls"] for op in ops)
-    m = runtime.metrics(spark_work, len(ops), n_urls)
+    m = runtime.metrics(spark_work, len(ops), sum(op["urls"] for op in ops))
     step_ids = {s["id"] for s in tracer.by_name("step")}
     m["state.commit_p50_s"] = _p50(
         [s["end"] - s["start"] for s in tracer.by_name("state.commit_batch")
@@ -454,21 +503,22 @@ def _step_layer_metrics(spark, wl, ops, ops_impl, runtime, spark_work, tracer,
     m.update(L.probe_admit(st.pending, st.politeness, st.cfg))
     st.bloom.blobs = st.blobs
     maybe_seen, _new = st.bloom.split(st.candidates)
-    m["bloom.maybe_seen_ratio"] = maybe_seen.count() / ops_impl.oracle["n_candidates"]
-    new_hashes = st.candidates.join(st.seen, "url", "left_anti").select("url_hash")
+    m["bloom.maybe_seen_ratio"] = maybe_seen.count() / len(ops_impl.backlog.candidates)
+    new_hashes = st.candidates.join(st.frontier, "url", "left_anti").select("url_hash")
     m.update(L.bloom_add_save(st.bloom, new_hashes, str(runs_dir / "bloom_probe")))
 
     prepared = CP.prepare(work, f"{wl.name}-layers", wl.layer_site, seed)
-    crawl_cfg = C.CrawlConfig(**wl.layer_crawl)
-    crawl_ops = CrawlOps(spark, prepared, crawl_cfg)
+    crawl_ops = CrawlOps(spark, prepared, wl.crawl, 10_000)
     before = runtime.snapshot()
-    t0 = time.perf_counter()
-    res = tracer.operation("crawl", crawl_ops.run, runs_dir, 0)
-    crawl = {"res": res, "wall": time.perf_counter() - t0}
+    crawl = crawl_ops.timed(
+        lambda fn, *a: tracer.operation("crawl", fn, *a), runs_dir, 0,
+        clock)
     crawl_work = runtime.since(before)
-    crawl["out"], crawl_errs, crawl["urls"] = crawl_ops.gate(runs_dir, 0, res)
-    lm, checks = _layer_metrics(spark, [crawl], prepared, crawl_cfg, runtime,
+    crawl["out"], crawl_errs = crawl_ops.gate(runs_dir, 0, crawl)
+    derived = FR.derive(prepared, crawl_ops.budget, 2)
+    derive_errs = FR.check_derived(spark, derived, crawl["res"].out_dir, 1)
+    lm, checks = _layer_metrics(spark, [crawl], crawl_ops, runtime,
                                 crawl_work, tracer, runs_dir,
                                 frontier_probes=False)
     lm.update(m)
-    return lm, [crawl_errs] + checks
+    return lm, [crawl_errs, derive_errs] + checks

@@ -3,8 +3,9 @@
 Two sources besides the spans:
 
 - ``SparkRuntime`` reads the Spark status REST API (the UI is on in the
-  traced run only) before and after an operation: jobs, tasks, executor
-  run/CPU/GC time, bytes read, shuffled and spilled, storage memory.
+  traced run only) before and after the timed operations: jobs and tasks
+  and storage memory here, executor run/CPU/GC time and bytes read,
+  shuffled and spilled through ``engine/taskmetrics``.
 - The isolated probes run one layer's public function on inputs captured
   from the workload's own crawl and force execution through the noop sink,
   so a layer whose call only plans (politeness, parse, verify, bloom, the
@@ -15,7 +16,6 @@ from __future__ import annotations
 
 import json
 import math
-import statistics
 import time
 import urllib.request
 from datetime import datetime, timezone
@@ -23,20 +23,18 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from spans import covered_length
+
 
 def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def timed_noop(make_df, reps: int = 2) -> float:
-    """Median wall time of building ``make_df()`` and running it to the
-    noop sink, over ``reps`` repetitions."""
-    times = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        noop(make_df())
-        times.append(time.perf_counter() - t0)
-    return statistics.median(times)
+def timed_noop(make_df) -> float:
+    """Wall time of building ``make_df()`` and running it to the noop sink."""
+    t0 = time.perf_counter()
+    noop(make_df())
+    return time.perf_counter() - t0
 
 
 # -- Spark runtime (status REST API) ----------------------------------------
@@ -49,7 +47,12 @@ def _rest_time(s: str | None) -> float | None:
 
 
 class SparkRuntime:
+    """Jobs and storage memory from the status REST API; the stage task
+    totals (run/CPU/GC time, bytes read, shuffled and spilled) and their
+    ratios from the engine's own ``engine/taskmetrics``."""
+
     def __init__(self, spark):
+        self.spark = spark
         self.base = spark.sparkContext.uiWebUrl
         if not self.base:
             raise RuntimeError("the traced run needs the Spark UI")
@@ -68,6 +71,15 @@ class SparkRuntime:
         finally:
             self.poll_s += time.perf_counter() - t0
 
+    def _task_totals(self) -> dict:
+        from pttcrawler_spark.engine import taskmetrics as TM
+        t0 = time.perf_counter()
+        totals = TM.sample(self.spark)
+        self.poll_s += time.perf_counter() - t0
+        if totals is None:
+            raise RuntimeError("no task metrics from the Spark UI")
+        return totals
+
     def sample_storage(self) -> None:
         for ex in self._get("executors"):
             self.peak_storage = max(self.peak_storage,
@@ -75,56 +87,39 @@ class SparkRuntime:
 
     def snapshot(self) -> dict:
         return {"jobs": {j["jobId"] for j in self._get("jobs")},
-                "stages": {(s["stageId"], s["attemptId"])
-                           for s in self._get("stages?status=complete")},
-                "t": time.time()}
+                "tasks": self._task_totals(), "t": time.time()}
 
     def since(self, before: dict) -> dict:
-        """Jobs and completed stages that ran after ``before``; take this
+        """Jobs and task totals of the work after ``before``; take this
         right after the measured operations, before any other Spark work."""
+        from pttcrawler_spark.engine import taskmetrics as TM
         return {"jobs": [j for j in self._get("jobs")
                          if j["jobId"] not in before["jobs"]],
-                "stages": [s for s in self._get("stages?status=complete")
-                           if (s["stageId"], s["attemptId"]) not in before["stages"]],
+                "tasks": TM.delta(before["tasks"], self._task_totals()),
                 "t0": before["t"], "t_end": time.time()}
 
     def metrics(self, work: dict, batches: int, urls: int) -> dict:
         """spark.* metrics of ``work`` (from ``since``), per batch / URL."""
-        jobs, stages = work["jobs"], work["stages"]
+        from pttcrawler_spark.engine import taskmetrics as TM
+        jobs, d = work["jobs"], work["tasks"]
         t0, t_end = work["t0"], work["t_end"]
         wall = t_end - t0
         # driver idle = operation wall time not covered by any running job
-        spans = sorted((max(_rest_time(j.get("submissionTime")) or t0, t0),
-                        min(_rest_time(j.get("completionTime")) or t_end, t_end))
-                       for j in jobs)
-        busy, cur_s, cur_e = 0.0, None, None
-        for s, e in spans:
-            if cur_e is None or s > cur_e:
-                if cur_e is not None:
-                    busy += cur_e - cur_s
-                cur_s, cur_e = s, e
-            else:
-                cur_e = max(cur_e, e)
-        if cur_e is not None:
-            busy += cur_e - cur_s
-        run_ms = sum(s.get("executorRunTime", 0) for s in stages)
-        cpu_ns = sum(s.get("executorCpuTime", 0) for s in stages)
-        gc_ms = sum(s.get("jvmGcTime", 0) for s in stages)
-        run_s = max(run_ms / 1e3, 1e-9)
+        busy = covered_length(
+            (max(_rest_time(j.get("submissionTime")) or t0, t0),
+             min(_rest_time(j.get("completionTime")) or t_end, t_end))
+            for j in jobs)
+        ratios = TM.summarize(d, self.cores, wall)
         return {
             "spark.jobs_per_batch": len(jobs) / batches,
             "spark.tasks_per_batch": sum(j.get("numTasks", 0) for j in jobs) / batches,
             "spark.driver_idle_s_per_batch": max(wall - busy, 0.0) / batches,
-            "spark.core_busy_frac": run_s / (self.cores * wall),
-            "spark.cpu_frac": cpu_ns / 1e9 / run_s,
-            "spark.gc_frac": gc_ms / 1e3 / run_s,
-            "spark.input_bytes_per_url":
-                sum(s.get("inputBytes", 0) for s in stages) / urls,
-            "spark.shuffle_write_bytes_per_url":
-                sum(s.get("shuffleWriteBytes", 0) for s in stages) / urls,
-            "spark.spill_bytes": sum(s.get("memoryBytesSpilled", 0)
-                                     + s.get("diskBytesSpilled", 0)
-                                     for s in stages),
+            "spark.core_busy_frac": ratios.get("core_utilization", 0.0),
+            "spark.cpu_frac": ratios.get("cpu_frac", 0.0),
+            "spark.gc_frac": ratios.get("gc_frac", 0.0),
+            "spark.input_bytes_per_url": d["input_bytes"] / urls,
+            "spark.shuffle_write_bytes_per_url": d["shuffle_write_bytes"] / urls,
+            "spark.spill_bytes": d["mem_spill_bytes"] + d["disk_spill_bytes"],
             "spark.peak_storage_mb": self.peak_storage / 1e6,
         }
 
@@ -256,14 +251,11 @@ def probe_state(spark, res) -> dict:
     names = sorted(p.name for p in (Path(out_dir) / "tables").iterdir())
     load_s = timed_noop(lambda: ST.load_snapshot(spark, out_dir).frontier)
 
-    def read_all():
-        t0 = time.perf_counter()
-        for name in names:
-            noop(ST.read_table(spark, out_dir, name, max_batch=res.final_batch))
-        return time.perf_counter() - t0
-
-    read_s = statistics.median(read_all() for _ in range(2))
-    return {"state.load_snapshot_s": load_s, "state.read_table_s": read_s}
+    t0 = time.perf_counter()
+    for name in names:
+        noop(ST.read_table(spark, out_dir, name, max_batch=res.final_batch))
+    return {"state.load_snapshot_s": load_s,
+            "state.read_table_s": time.perf_counter() - t0}
 
 
 def probe_store(res) -> dict:
@@ -274,5 +266,5 @@ def probe_store(res) -> dict:
     for df in tables.values():
         noop(df)
     build_s = time.perf_counter() - t0
-    enrich_s = timed_noop(lambda: S.enrich_ip_asn(tables["ip_asn"]), reps=1)
+    enrich_s = timed_noop(lambda: S.enrich_ip_asn(tables["ip_asn"]))
     return {"store.build_relational_s": build_s, "store.enrich_asn_s": enrich_s}

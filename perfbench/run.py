@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Benchmark command for the crawl engine (see perfbench/README.md).
 
-    python3 perfbench/run.py --workload crawl_payload --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload crawl_payload --seed 1 --seconds 10 --trace 0
     python3 perfbench/run.py --selftest
 
 Run from the repository root. The last line of stdout is one JSON object:
@@ -27,7 +27,7 @@ def main() -> int:
                                  formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--workload")
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=20.0)
+    ap.add_argument("--seconds", type=float, default=10.0)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--selftest", action="store_true",
                     help="tiny-site check of metric names/units and the gate")

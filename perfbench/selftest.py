@@ -8,7 +8,10 @@ Checks, in one Spark session:
 2. the gate trips on corrupted outputs: one fetched URL dropped from a copy
    of a crawl's frontier, one payload_verify row flipped, one report tally
    changed, one admitted URL dropped from a step's committed delta — each
-   must give ops_failed_ratio > 0.
+   must give ops_failed_ratio > 0;
+3. the step workload's derived frontier is the one an engine crawl of the
+   same site commits after as many batches, and a row missing from it
+   shows.
 
 Prints one line per check and exits non-zero on the first failure.
 """
@@ -53,29 +56,28 @@ def _check_metrics(result: dict, spec: list[dict], what: str) -> None:
 
 
 def _corrupt_crawl(spark, work: Path) -> None:
-    from pttcrawler_spark.engine import crawl as C
-    wl = WORKLOADS["crawl_payload"]
+    wl = next(w for w in WORKLOADS.values() if w.kind == "crawl")
     p = CP.prepare(work, "selftest", wl.tiny, 1)
-    out_dir = str(work / "runs" / "selftest-crawl")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    res = C.crawl(spark, spark.read.parquet(p.corpus_dir), p.seeds, out_dir,
-                  C.CrawlConfig(**wl.crawl))
-    out = G.crawl_outputs(res)
-    _expect(G.check_crawl(out, p.oracle) == [], "crawl outputs pass the gate")
+    runs_dir = work / "runs" / "selftest"
+    ops = harness.CrawlOps(spark, p, wl.crawl, wl.batches)
+    res = ops.run(str(runs_dir / "crawl"))
+    out, errs = ops.gate(runs_dir, 0, {"res": res})
+    _expect(errs == [], "crawl outputs pass the gate")
+
+    def check(o):
+        return G.check_crawl(o, p.oracle, res.final_batch + 1, ops.budget)
 
     dropped = copy.deepcopy(out)
     host = sorted(dropped["fetch_order"])[0]
     url = dropped["fetch_order"][host].pop()
     dropped["frontier_urls"].remove(url)
-    ratio = _failed_ratio([G.check_crawl(out, p.oracle),
-                           G.check_crawl(dropped, p.oracle)])
+    ratio = _failed_ratio([check(out), check(dropped)])
     _expect(ratio > 0, f"dropping one fetched URL trips the gate "
                        f"(ops_failed_ratio {ratio})")
 
     flipped = copy.deepcopy(out)
     flipped["verify"][0]["pixel_ok"] = False
-    _expect(G.check_crawl(flipped, p.oracle) != [],
-            "a failing payload_verify row trips the gate")
+    _expect(check(flipped) != [], "a failing payload_verify row trips the gate")
 
     rep = {"sheet_rows": {"Article": p.oracle["n_articles"],
                           "Push": p.oracle["n_pushes"],
@@ -85,26 +87,35 @@ def _corrupt_crawl(spark, work: Path) -> None:
     rep["tallies"][0] += 1
     _expect(G.check_report(rep, p.oracle) != [],
             "a changed TW-IP tally trips the gate")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    shutil.rmtree(runs_dir, ignore_errors=True)
 
 
 def _corrupt_step(spark, work: Path) -> None:
     wl = next(w for w in WORKLOADS.values() if w.kind == "step")
-    backlog = FR.prepare(work, wl.tiny, 1)
-    stepper = FR.Stepper(spark, backlog, wl.tiny)
-    out_dir = str(work / "runs" / "selftest-step")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    stepper.step(out_dir, 0)
-    out = FR.step_outputs(out_dir, 0)
-    _expect(FR.check_step(out, backlog.oracle) == [], "step outputs pass the gate")
+    p = CP.prepare(work, "selftest-step", wl.tiny, 1)
+    runs_dir = work / "runs" / "selftest"
+    ops = harness.StepOps(spark, p, wl.crawl, wl.cut, runs_dir)
+    ops.stepper.step(str(runs_dir / "steps"), 0)
+    out, errs = ops.gate(runs_dir, 0, {})
+    _expect(errs == [], "step outputs pass the gate")
     dropped = copy.deepcopy(out)
     dropped["admitted"].pop()
-    ratio = _failed_ratio([FR.check_step(out, backlog.oracle),
-                           FR.check_step(dropped, backlog.oracle)])
+    ratio = _failed_ratio([errs, FR.check_step(dropped, ops.backlog)])
     _expect(ratio > 0, f"dropping one admitted URL trips the gate "
                        f"(ops_failed_ratio {ratio})")
-    stepper.close()
-    shutil.rmtree(out_dir, ignore_errors=True)
+    ops.stepper.close()
+
+    # the derivation: a real polite crawl of the same site must commit the
+    # derived frontier; one dropped pending row must show
+    crawl = harness.CrawlOps(spark, p, wl.crawl, wl.cut)
+    res = crawl.run(str(runs_dir / "crawl"))
+    _expect(FR.check_derived(spark, ops.backlog, res.out_dir, wl.cut - 1) == [],
+            f"the derived frontier is the engine's after {wl.cut} batches")
+    short = copy.copy(ops.backlog)
+    short.pending = short.pending.iloc[1:]
+    _expect(FR.check_derived(spark, short, res.out_dir, wl.cut - 1) != [],
+            "a pending row missing from the derived frontier trips the check")
+    shutil.rmtree(runs_dir, ignore_errors=True)
 
 
 def main(work: Path) -> int:
@@ -116,7 +127,7 @@ def main(work: Path) -> int:
     try:
         for name, wl in WORKLOADS.items():
             for trace in (False, True):
-                r = harness.run(name, 1, 0, trace, work, shape=wl.tiny,
+                r = harness.run(name, 1, 0, trace, work, site=wl.tiny,
                                 spark=spark)
                 _check_metrics(r, spec["per_layer" if trace else "end_to_end"],
                                f"{name} trace={int(trace)}")

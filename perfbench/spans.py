@@ -24,6 +24,23 @@ import threading
 import time
 
 
+def covered_length(intervals) -> float:
+    """Length of the union of (start, end) intervals."""
+    covered, cur_s, cur_e = 0.0, None, None
+    for s, e in sorted(intervals):
+        if e <= s:
+            continue
+        if cur_e is None or s > cur_e:
+            if cur_e is not None:
+                covered += cur_e - cur_s
+            cur_s, cur_e = s, e
+        else:
+            cur_e = max(cur_e, e)
+    if cur_e is not None:
+        covered += cur_e - cur_s
+    return covered
+
+
 class Tracer:
     def __init__(self, run_id: str):
         self.run_id = run_id
@@ -103,21 +120,9 @@ class Tracer:
 
     def self_time(self, span: dict) -> float:
         """Span duration minus the part of it that child spans cover."""
-        kids = sorted((max(c["start"], span["start"]), min(c["end"], span["end"]))
-                      for c in self.spans if c["parent"] == span["id"])
-        covered, cur_s, cur_e = 0.0, None, None
-        for s, e in kids:
-            if e <= s:
-                continue
-            if cur_e is None or s > cur_e:
-                if cur_e is not None:
-                    covered += cur_e - cur_s
-                cur_s, cur_e = s, e
-            else:
-                cur_e = max(cur_e, e)
-        if cur_e is not None:
-            covered += cur_e - cur_s
-        return (span["end"] - span["start"]) - covered
+        kids = [(max(c["start"], span["start"]), min(c["end"], span["end"]))
+                for c in self.spans if c["parent"] == span["id"]]
+        return (span["end"] - span["start"]) - covered_length(kids)
 
     def summary(self) -> dict:
         """name → {calls, total_s, self_s, p50_s, lazy} over every span."""
