@@ -33,9 +33,15 @@ Scale design notes (100 TB / 10^10 URLs):
 - frontier durability is merge-on-read: each batch commits an O(changes)
   delta, periodically compacted to a full snapshot (engine/state docstring) —
   the Iceberg MERGE INTO analog at the parquet level;
-- lineage is broken every batch by an eager localCheckpoint of the frontier
-  and politeness state, so the plan never grows with batch count (the
-  classic iterative-job trap) without a per-batch parquet round-trip.
+- materialize once: every intermediate a batch reads more than once (the
+  admission, the fetched pages, the discovered URLs, the parse, the frontier
+  delta, the next politeness and frontier state) is an eager
+  localCheckpoint LEAF, computed exactly once in executor block storage.
+  Everything downstream plans against those shallow leaves, so no later
+  job or driver-side analysis re-derives the batch lineage, and the plan
+  never grows with batch count (the classic iterative-job trap) without a
+  per-batch parquet round-trip. The loop frees each leaf's blocks itself
+  once the batch's commit — its last reader — has landed.
 """
 
 from __future__ import annotations
@@ -64,30 +70,44 @@ from pyspark import StorageLevel as _SL
 
 
 def _heavy_cache_level(spark) -> "_SL":
-    """Storage level for the per-batch HEAVY caches (raw html + image
-    payload columns): written once, read by every consumer job in the
-    batch, unpersisted at batch end. Default MEMORY_AND_DISK — but HOW the
-    blocks are built matters more than where they live (all measured on the
-    scaling corpus, 172k-URL steady batches, G1):
+    """Storage level of the per-batch HEAVY leaves (the fetched pages with
+    their raw html + image payload columns, and the parse): computed once,
+    read by every consumer job in the batch, freed after the batch's
+    commit. Default MEMORY_AND_DISK. The leaves are checkpoint blocks of
+    rows, not the in-memory columnar cache, so the columnar cache's
+    compression setting does not touch them. What matters is the heap the
+    blocks live on (measured on the scaling corpus, 172k-URL steady
+    batches, G1):
 
-    - in-memory columnar CACHE COMPRESSION on image payload bytes is pure
-      waste (they are already codec-compressed): cache build 2x slower at
-      every core count. Payload-heavy sessions should set
-      spark.sql.inMemoryColumnarStorage.compressed=false (bench does).
     - an ADAPTIVE (unbounded) G1 young gen re-copies the GBs of surviving
-      cache blocks on every young pause: 2.3 s pauses, 50-80 % of task time
-      in GC at local[32]. A bounded young gen (-XX:G1MaxNewSizePercent=10)
+      blocks on every young pause: 2.3 s pauses, 50-80 % of task time in GC
+      at local[32]. A bounded young gen (-XX:G1MaxNewSizePercent=10)
       promotes the blocks once and cuts GC wall ~6x.
-    - OFF_HEAP (tried as the GC fix before the two findings above) builds
-      blocks ~2x slower than on-heap uncompressed (an extra serialization
-      pass into Unsafe buffers) and lost end-to-end once young-gen was
-      bounded: steady batch 49.5 s vs 25.4 s at local[32].
+    - OFF_HEAP (tried as the GC fix before the finding above) builds
+      blocks ~2x slower than on-heap (an extra serialization pass into
+      Unsafe buffers) and lost end-to-end once young-gen was bounded:
+      steady batch 49.5 s vs 25.4 s at local[32].
 
     SPARK_GRAFT_HEAVY_CACHE overrides for experiments."""
     env = os.environ.get("SPARK_GRAFT_HEAVY_CACHE")
     if env:
         return getattr(_SL, env)
     return _SL.MEMORY_AND_DISK
+
+
+def _leaf(df: DataFrame, level: "_SL | None" = None) -> DataFrame:
+    """Compute ``df`` exactly once, now, into executor block storage and
+    return a DataFrame planned against those blocks: a shallow leaf that
+    later jobs read instead of re-deriving (and the driver re-analyzing)
+    ``df``'s lineage. ``level`` None = Spark's local-checkpoint default."""
+    return df.localCheckpoint(eager=True, storageLevel=level)
+
+
+def _release(leaves: list[DataFrame]) -> None:
+    """Free the blocks of :func:`_leaf` frames now instead of whenever a
+    driver GC lets the ContextCleaner find them."""
+    for df in leaves:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 class _Phase:
@@ -336,7 +356,9 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
     tm_before = TM.sample(spark) if TM.ENABLED else None
     commit_pool = ThreadPoolExecutor(max_workers=1)   # single-slot: sequential markers
     commit_fut = None
-    commit_caches: list[DataFrame] = []
+    # this batch's leaves plus the frontier/politeness leaves it started
+    # from: freed once the batch's commit (their last reader) has landed
+    commit_leaves: list[DataFrame] = []
     verify_pool = ThreadPoolExecutor(max_workers=1)   # single-slot: sequential verify
     verify_fut = None
 
@@ -352,9 +374,11 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
             verify_fut.result()
         verify_fut = verify_pool.submit(
             V.verify_committed_batch, spark, out_dir, bid)
-    # loop-critical jobs (materialize, checkpoints) share executors FAIRly
-    # with the pipelined commit writes (pool "commit", engine/state.py)
+    # loop-critical jobs (leaf checkpoints) share executors FAIRly with the
+    # pipelined commit writes (pool "commit", engine/state.py)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "loop")
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    carried: list[DataFrame] = []      # the frontier/politeness leaves
     while batches_run < cfg.max_batches:
         batches_run += 1
         batch_id += 1
@@ -368,28 +392,24 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         politeness = POL.refill(politeness, cfg.batch_seconds, cfg.burst)
         strict = cfg.start_date is not None
         if cfg.impl == "pandas":
-            marked = POL.admit_apply_in_pandas(pending, politeness, cfg.robots,
-                                               strict_barrier=strict)
-            blocked = marked.where(F.col("robots_blocked")).drop("admit", "robots_blocked")
-            marked = marked.drop("robots_blocked")
+            admission = _leaf(POL.admit_apply_in_pandas(
+                pending, politeness, cfg.robots, strict_barrier=strict))
+            blocked = admission.where(F.col("robots_blocked")).drop(
+                "admit", "robots_blocked")
+            marked = admission.drop("robots_blocked")
         else:
             # burst capacity is the literal per-host budget ceiling →
             # WindowGroupLimit hot-host path (admit_window docstring)
-            marked = POL.admit_window(pending, politeness, strict_barrier=strict,
-                                      max_budget=math.ceil(cfg.burst))
+            admission = marked = _leaf(POL.admit_window(
+                pending, politeness, strict_barrier=strict,
+                max_budget=math.ceil(cfg.burst)))
             blocked = None
-
-        # marked is read by MANY consumers per batch (admitted → fetch join,
-        # deferred → metrics/cancel, politeness spend, delta) — persist the
-        # narrow frame so the per-host admit window computes once, not once
-        # per consuming job
-        marked = marked.persist()
         admitted = marked.where(F.col("admit")).drop("admit")
         if fetcher is not None:
             # real fetch stage (e.g. HTTP mapInPandas, sources/http_fetch):
             # network I/O happens on executors, politeness already bounded
             # the per-host batch upstream
-            fetched = fetcher(admitted).persist(heavy_level)
+            fetched = fetcher(admitted)
         else:
             # simulated fetch: URL → page body. The admitted set (bounded by
             # the politeness budget) is broadcast into the corpus scan, so
@@ -430,8 +450,17 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
                            ("w", "int"), ("h", "int"), ("fmt", "string"),
                            ("caption", "string"), ("phash", "long")]:
                 missing = missing.withColumn(c, F.lit(None).cast(typ))
-            fetched = matched.unionByName(missing).persist(heavy_level)
+            fetched = matched.unionByName(missing)
         ph.mark("admit+fetch(lazy)")
+        # the batch's single pass over the corpus scan / network fetch
+        fetched = _leaf(fetched, heavy_level)
+        kc = {r["kind"]: (r["cnt"], r["n_fail"]) for r in (
+            fetched.groupBy("kind")
+            .agg(F.count("*").alias("cnt"),
+                 F.sum(F.when(F.col("_html").isNull(), 1).otherwise(0))
+                 .alias("n_fail"))
+            .collect())}
+        ph.mark("materialize fetched (kind counts)")
 
         ok = fetched.where(F.col("_html").isNotNull())
 
@@ -476,29 +505,38 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
             pre_anti.withColumn("_rn", F.row_number().over(w_url))
             .where(F.col("_rn") == 1).drop("_rn")
         )
-        # URL-seen: bloom pre-filter (scale path) + exact anti-join (truth)
+        # URL-seen: bloom pre-filter (scale path) + exact check (truth). The
+        # exact check FLAGS seen candidates (_seen) instead of dropping them,
+        # so one leaf serves both the new rows and the per-host candidate
+        # counts of the metrics
+        def _flag_seen(rows: DataFrame) -> DataFrame:
+            return rows.join(frontier.select(
+                "url", F.lit(True).alias("_seen")), "url", "left")
+
         if bloom is not None:
             maybe_seen, definitely_new = bloom.split(pre_anti)
-            verified_new = maybe_seen.join(frontier.select("url"), "url", "left_anti")
-            new_rows = definitely_new.unionByName(verified_new)
+            discovered = definitely_new.withColumn(
+                "_seen", F.lit(None).cast("boolean")).unionByName(
+                _flag_seen(maybe_seen))
         else:
-            new_rows = pre_anti.join(frontier.select("url"), "url", "left_anti")
-        new_rows = new_rows.persist()
+            discovered = _flag_seen(pre_anti)
+        discovered = _leaf(discovered)
+        new_rows = discovered.where(F.col("_seen").isNull()).drop("_seen")
         ph.mark("discover(lazy)")
 
         # --- article pages → parsed outputs ---------------------------------
         # SINGLE-PASS parse: the multi-KB html column is the batch's dominant
         # byte/CPU stream; articles+pushes+errors+verify-caption are all
-        # extracted in ONE scan whose narrow result is persisted (materialized
-        # below, before the parallel commit writes), so each downstream table
-        # write reads parsed fields, never raw pages. Measured at local[32]:
-        # the split-consumer version re-streamed the cached html 3-4x/batch.
+        # extracted in ONE scan into a leaf, so each downstream table write
+        # reads parsed fields, never raw pages. Measured at local[32]: the
+        # split-consumer version re-streamed the cached html 3-4x/batch.
         tables: dict = {}
         art = ok.where(F.col("kind") == "article").withColumn(
             "web_id", FP.web_id_of(F.col("url")))
-        parsed_all = FP.parse_article_pages(
+        parsed_all = _leaf(FP.parse_article_pages(
             art.select("web_id", "board", "page_index", "dom_pos", "url",
-                       F.col("_html").alias("html"))).persist(heavy_level)
+                       F.col("_html").alias("html"))), heavy_level)
+        ph.mark("materialize parsed (single-pass)")
         # F7: unparseable pages (PostException analog) become status rows
         # in parse_errors; everything downstream sees only parse-ok pages
         # (the reference's per-article try/except skip,
@@ -522,7 +560,7 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         parsed_articles = parsed_ok.drop(
             "parse_error", "pushes", "expected_caption", "url")
         parsed_pushes = FP.pushes_from_parsed(parsed_ok)
-        # images/verify read the binary column from the fetched cache; the
+        # images/verify read the binary column from the fetched leaf; the
         # parse-ok + date-kept row set arrives as a BROADCAST join against
         # the narrow parsed frame (web_ids + caption), not an html re-scan
         kept = F.broadcast(parsed_ok.select(
@@ -589,14 +627,6 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         else:
             delta = changed.unionByName(delta_new.select(*FRONTIER_COLS))
 
-        # next frontier = merge(delta over current) — the SAME latest-wins
-        # semantics state.load_frontier replays from the delta files, so the
-        # in-memory path and the resume path agree by construction
-        frontier_next = (
-            frontier.join(delta.select("url"), "url", "left_anti")
-            .unionByName(delta)
-        )
-
         n_admitted = admitted.groupBy("host").agg(F.count("*").alias("n_admitted"))
         politeness_next = POL.spend(politeness, n_admitted)
         politeness_next = politeness_next.unionByName(
@@ -613,8 +643,9 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
             F.count("*").alias("_deferred"))
         # per-partition lineage: deduped = discovered-this-batch minus
         # actually-new, PER HOST (north rule: per-partition lineage/metrics)
-        cand_cnt = pre_anti.groupBy("host").agg(F.count("*").alias("_cand"))
-        new_cnt = new_rows.groupBy("host").agg(F.count("*").alias("_new"))
+        disc_cnt = discovered.groupBy("host").agg(
+            F.count("*").alias("_cand"),
+            F.count(F.when(F.col("_seen").isNull(), 1)).alias("_new"))
         metrics = (
             fetched.groupBy("host", "host_salt")
             .agg(
@@ -622,8 +653,7 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
                 F.sum(F.when(F.col("_html").isNull(), 1).otherwise(0)).alias("failed"),
             )
             .join(deferred, "host", "left")
-            .join(cand_cnt, "host", "left")
-            .join(new_cnt, "host", "left")
+            .join(disc_cnt, "host", "left")
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
             .withColumn("partition_id", F.col("host_salt"))
             .withColumn("deduped",
@@ -638,69 +668,35 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
             bloom.add(new_rows.select("url_hash"))
             bloom.save(out_dir, batch_id)
 
+        # the commit writes read both leaves, the next frontier the delta and
+        # the next batch the politeness: each is computed once, here
+        delta = _leaf(delta)
+        politeness_next = _leaf(politeness_next)
         ph.mark("plan frontier/politeness/metrics")
-        # materialize the batch ONCE: this kind-count collect is the batch's
-        # single full pass over `fetched` (the corpus scan / network fetch).
-        # It must COMPLETE before the parallel commit writes are submitted —
-        # concurrent jobs over a still-lazy persist each race to compute the
-        # missing partitions, re-scanning the corpus up to once per job
-        # (measured on the 2.7 GB scaling corpus: 9 concurrent writes turned
-        # a 256-URL bootstrap batch into 60 s of redundant scans; with the
-        # pass completed first the same batch is ~2 s).
-        kc = {r["kind"]: (r["cnt"], r["n_fail"]) for r in (
-            fetched.groupBy("kind")
-            .agg(F.count("*").alias("cnt"),
-                 F.sum(F.when(F.col("_html").isNull(), 1).otherwise(0))
-                 .alias("n_fail"))
-            .collect())}
-        ph.mark("materialize fetched (kind counts)")
-        # materialize the single-pass parse BEFORE the parallel commit
-        # writes for the same reason as above: concurrent jobs over a lazy
-        # persist race to compute missing partitions, re-running the parse
-        # once per consumer. One count = one parse pass, then every write
-        # job reads the narrow cached result.
-        parsed_all.count()
-        ph.mark("materialize parsed (single-pass)")
-        # lineage break WITHOUT a parquet round-trip: the checkpointed
-        # frontier/politeness live in executor block storage; the next batch
-        # plans against a compact leaf, and plan depth stays O(1) in batch
-        # count. (Reliable checkpoint dir on a real cluster.) The explicit
-        # repartition pins the partition count — a bare anti-join ∪ delta
-        # union would ADD the delta's partitions to the frontier's every
-        # batch, growing task counts without bound. The checkpoint jobs run
-        # CONCURRENTLY with the commit writes (safe now that `fetched` is
-        # fully materialized — every job reads the cache, nothing races to
-        # recompute it), so their wall time hides behind the write jobs.
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        ckpt_pool = ThreadPoolExecutor(max_workers=2)
-        def _in_loop_pool(fn):
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", "loop")
-            return fn()
-
-        fut_frontier = ckpt_pool.submit(
-            _in_loop_pool,
-            lambda: frontier_next.repartition(n_shuffle, "url")
-            .localCheckpoint(eager=True))
-        fut_politeness = ckpt_pool.submit(
-            _in_loop_pool,
-            lambda: politeness_next.localCheckpoint(eager=True))
         # PIPELINED COMMIT: batch k's durability writes (output tables +
         # state + marker) run on a single-slot background thread while the
         # loop plans and materializes batch k+1 — the loop's only serial
-        # dependency between batches is the checkpointed frontier/politeness
-        # (awaited below), not the table writes. Await-before-submit on the
-        # one-slot pool keeps commits strictly sequential, so the marker
-        # order (= resume order) is exactly the unpipelined one and a crash
-        # still leaves at most one uncommitted orphan batch. The caches a
-        # commit reads (fetched/parsed/marked/new_rows) stay persisted until
-        # ITS commit completes — unpersist is deferred one batch. Net effect:
-        # steady-state cadence = max(compute, commit) instead of their sum.
+        # dependency between batches is the checkpointed frontier/politeness,
+        # not the table writes. Await-before-submit on the one-slot pool
+        # keeps commits strictly sequential, so the marker order (= resume
+        # order) is exactly the unpipelined one and a crash still leaves at
+        # most one uncommitted orphan batch. The leaves a commit reads (this
+        # batch's and the frontier/politeness it started from) are freed
+        # only when ITS commit completes — one batch later when pipelined.
+        # Net effect: steady-state cadence = max(compute, commit) instead of
+        # their sum.
         if commit_fut is not None:
             commit_fut.result()
-            for df in commit_caches:
-                df.unpersist()
+            _release(commit_leaves)
             _submit_verify(batch_id - 1)
             ph.mark("await previous commit")
+        # next frontier = merge(delta over current) — the SAME latest-wins
+        # semantics state.load_frontier replays from the delta files, so the
+        # in-memory path and the resume path agree by construction
+        frontier_next = (
+            frontier.join(delta.select("url"), "url", "left_anti")
+            .unionByName(delta)
+        )
         full_due = batch_id % cfg.compact_every == 0
         commit_fut = commit_pool.submit(
             ST.commit_batch, out_dir, batch_id,
@@ -708,22 +704,29 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
             politeness=politeness_next, metrics=metrics,
             tables=tables,
             frontier_delta=None if full_due else delta)
-        commit_caches = [fetched, parsed_all, new_rows, marked]
-        frontier = fut_frontier.result()
-        politeness = fut_politeness.result()
-        ckpt_pool.shutdown()
+        commit_leaves = carried + [admission, fetched, discovered, parsed_all,
+                                   delta]
+        # lineage break WITHOUT a parquet round-trip, concurrent with the
+        # commit writes: the next batch plans against a compact leaf and
+        # plan depth stays O(1) in batch count. (Reliable checkpoint dir on
+        # a real cluster.) The explicit repartition pins the partition
+        # count — a bare anti-join ∪ delta union would ADD the delta's
+        # partitions to the frontier's every batch, growing task counts
+        # without bound.
+        frontier = _leaf(frontier_next.repartition(n_shuffle, "url"))
+        politeness = politeness_next
+        carried = [frontier, politeness]
         if not cfg.pipeline_commits:
             # sequential commits (default): the write jobs still overlap the
-            # frontier/politeness checkpoints above, but the batch does not
-            # end until its own commit lands — one batch's heavy caches
-            # resident at a time, all cores on one batch's jobs
+            # frontier checkpoint above, but the batch does not end until
+            # its own commit lands — one batch's heavy leaves resident at a
+            # time, all cores on one batch's jobs
             commit_fut.result()
             commit_fut = None
-            for df in commit_caches:
-                df.unpersist()
-            commit_caches = []
+            _release(commit_leaves)
+            commit_leaves = []
             # batch N durably committed → its verify runs while batch N+1
-            # computes (reads the committed parquet, pins no cache)
+            # computes (reads the committed parquet, pins no leaf)
             _submit_verify(batch_id)
         ph.mark("commit submit + checkpoint")
         n_rows = sum(c for c, _ in kc.values())
@@ -747,13 +750,10 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
                 tm_before = tm_after
         batch_stats.append(stats)
         n_fetched_total += n_rows
-        # caches are unpersisted when THIS batch's background commit is
-        # awaited (top of the next iteration / after the loop)
 
     if commit_fut is not None:
         commit_fut.result()
-        for df in commit_caches:
-            df.unpersist()
+        _release(commit_leaves)
         commit_fut = None
         _submit_verify(batch_id)
     commit_pool.shutdown()
@@ -767,6 +767,7 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         # instead of a base+delta merge. Written AFTER the final marker;
         # readers only trust it once _SUCCESS lands (see engine/state doc).
         ST.write_frontier_compaction(out_dir, batch_id, frontier)
+    _release(carried)
 
     return CrawlResult(out_dir=out_dir, final_batch=batch_id,
                        n_fetched=n_fetched_total, spark=spark,

@@ -132,13 +132,22 @@ def main() -> None:
         t1 = dict(prev["sf1_seconds"])
         t01.update(time_keys(spark, qmap, upd, args.sf01_dir, label="sf0.1"))
         t1.update(time_keys(spark, qmap, upd, args.sf1_dir, label="sf1"))
-        prev.setdefault("updated_keys", []).extend(upd)
+        # order-preserving dedupe: re-timing a key twice records it once
+        prev["updated_keys"] = list(dict.fromkeys(
+            prev.get("updated_keys", []) + upd))
     else:
         t01 = time_keys(spark, qmap, names, args.sf01_dir, label="sf0.1")
         t1 = time_keys(spark, qmap, measured, args.sf1_dir, label="sf1")
         prev = {}
-    ratios = {k: round(t1[k] / max(t01[k], 1e-9), 2) for k in measured}
-    over_bar = sorted((k for k in measured if ratios[k] > 12),
+    # a key added to queries() after the base artifact was written has no
+    # timing on one side until it is passed to --update: skip, don't crash
+    paired = [k for k in measured if k in t01 and k in t1]
+    unpaired = [k for k in measured if k not in paired]
+    if unpaired:
+        print(f"warning: no sf0.1+sf1 timing pair for {unpaired}; "
+              f"re-run with --update {','.join(unpaired)}", file=sys.stderr)
+    ratios = {k: round(t1[k] / max(t01[k], 1e-9), 2) for k in paired}
+    over_bar = sorted((k for k in paired if ratios[k] > 12),
                       key=lambda k: -ratios[k])
     result = {
         "metric": "sf1_vs_sf0.1_full_suite",
